@@ -17,8 +17,12 @@ import graft.streaming.EventsStreaming
   * instance appends `key \t value` lines (URL-encoded, so tabs/newlines in
   * data round-trip) to its OWN file, named
   * `log-<createMillis>-<uuid>.tsv` — executor tasks never contend on a
-  * shared file or lock. Readers replay every log file in filename order
-  * (creation-time prefix) and keep the last write per key.
+  * shared file or lock. The merged view is a replay of every log file in
+  * filename order (creation-time prefix), keeping the last write per key.
+  * A [[FileKvStore.View]] computes that replay incrementally: it tails
+  * each file from the byte it last applied, and a line overrides a key
+  * only if its file sorts at or after the file that last set the key, so
+  * the result equals a full replay however the appends interleave.
   *
   * Semantics and limits (deliberate, documented):
   *  - Idempotent upserts: replaying a micro-batch rewrites the same keys
@@ -42,6 +46,7 @@ final class FileKvStore(dir: String) extends EventsStreaming.UpsertStore {
   }
 
   def upsert(key: String, value: String): Unit = synchronized {
+    require(key.nonEmpty, "FileKvStore: empty key")
     val line = FileKvStore.enc(key) + "\t" + FileKvStore.enc(value) + "\n"
     Files.write(logPath, line.getBytes(UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
@@ -125,17 +130,81 @@ object FileKvStore {
       .filter(f => f.getName.startsWith("log-") && f.getName.endsWith(".tsv"))
       .sortBy(_.getName)
 
-  /** Replay all logs in creation order; last write per key wins. */
-  def read(dir: String): Map[String, String] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    logFiles(dir).foreach { f =>
-      Files.readAllLines(f.toPath).forEach { line =>
-        val i = line.indexOf('\t')
-        if (i > 0) m.put(dec(line.substring(0, i)), dec(line.substring(i + 1)))
+  /** Incremental replay of the log directory. Each [[snapshot]] lists the
+    * directory, stats every `log-*.tsv` and applies only the complete
+    * (`\n`-terminated) lines appended since the previous call; a torn
+    * trailing write stays pending until its newline lands. A line from
+    * file `f` overrides a key only if `f` sorts at or after the file that
+    * last set the key — the result is a full replay in filename order
+    * even when an older writer appends after a newer file exists. If a
+    * known file vanishes or shrinks (compaction), the view replays from
+    * scratch. A complete line that does not decode (no tab, empty key, a
+    * bad `%XX` escape) is skipped and counted in [[skippedLines]]. */
+  final class View(dir: String) {
+    private var values = Map.empty[String, String]
+    private val owner = scala.collection.mutable.HashMap.empty[String, String]
+    private val applied = scala.collection.mutable.HashMap.empty[String, Long]
+    private var skipped = 0L
+
+    /** Complete lines under the current files that failed to decode. */
+    def skippedLines: Long = synchronized(skipped)
+
+    /** The merged view as of this call: every write completed before it. */
+    def snapshot(): Map[String, String] = synchronized {
+      try catchUp()
+      catch { case _: java.nio.file.NoSuchFileException => catchUp() }
+      values
+    }
+
+    private def reset(): Unit = {
+      values = Map.empty; owner.clear(); applied.clear(); skipped = 0
+    }
+
+    private def catchUp(): Unit = {
+      val files = logFiles(dir).map { f =>
+        val attrs = Files.readAttributes(f.toPath,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        if (!attrs.isRegularFile)
+          throw new java.io.IOException(s"${f.getName} is not a regular file")
+        (f, attrs.size)
+      }
+      val sizes = files.map { case (f, n) => f.getName -> n }.toMap
+      if (applied.exists { case (name, at) => sizes.get(name).forall(_ < at) })
+        reset()
+      files.foreach { case (f, size) =>
+        val at = applied.getOrElse(f.getName, 0L)
+        if (size > at) applied(f.getName) = at + tail(f, at, size - at)
       }
     }
-    m.toMap
+
+    /** Applies the complete lines in `[at, at + len)` of `f`; returns the
+      * bytes consumed (up to and including the last newline). */
+    private def tail(f: File, at: Long, len: Long): Long = {
+      val buf = java.nio.ByteBuffer.allocate(len.toInt)
+      scala.util.Using.resource(java.nio.channels.FileChannel.open(f.toPath)) { ch =>
+        while (buf.hasRemaining && ch.read(buf, at + buf.position()) >= 0) ()
+      }
+      val bytes = buf.array
+      val end = bytes.lastIndexOf('\n'.toByte, buf.position() - 1) + 1
+      val name = f.getName
+      new String(bytes, 0, end, UTF_8).split('\n').foreach { line =>
+        val i = line.indexOf('\t')
+        val kv = if (i <= 0) None else scala.util.Try(
+          (dec(line.substring(0, i)), dec(line.substring(i + 1)))).toOption
+        kv match {
+          case Some((k, v)) if owner.get(k).forall(_ <= name) =>
+            values = values.updated(k, v); owner(k) = name
+          case Some(_) => ()
+          case None => if (line.nonEmpty) skipped += 1
+        }
+      }
+      end
+    }
   }
+
+  /** One-shot replay of all logs in creation order; last write per key
+    * wins. */
+  def read(dir: String): Map[String, String] = new View(dir).snapshot()
 
   /** Rewrite the merged view as one log and drop the replayed files.
     * Call only with no active writers (e.g. between streaming runs). */

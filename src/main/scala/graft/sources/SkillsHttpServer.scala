@@ -27,17 +27,27 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * clean → populate → publish → HTTP GET runs end-to-end in-process
   * (HttpServingSpec pins it byte-equal to `q_serving_lookup`).
   *
-  * Serving shape: every request replays the store directory (the view a
-  * freshly restarted serving JVM has — reads are never stale across
-  * republishes). That is O(store) per request, which is the right
-  * trade for a smoke/test-scale shim; at real serving scale the same
-  * two routes sit on a real KV connector behind the identical seam, and
-  * nothing upstream of the store changes. Values are the `rowSink`
-  * serialization (sorted `k=v` pairs, comma-joined, structural chars
-  * percent-escaped inside fields) — unambiguous for ANY field content,
-  * including the comma-bearing job titles scraped CSV produces. */
+  * Serving shape: the server holds one [[FileKvStore.View]] of the
+  * store directory and every request takes a snapshot of it. The
+  * snapshot lists the directory and applies only the log lines appended
+  * since the previous request, so a request costs a directory listing
+  * plus the new writes, not O(store), yet still sees every write that completed before it
+  * arrived — the same answer a full replay in filename order (the view
+  * of a freshly restarted serving JVM) gives. A request the store cannot
+  * answer (an unreadable log) gets `500 {"error": "<reason>"}`. Values
+  * are the `rowSink` serialization (sorted `k=v` pairs, comma-joined,
+  * structural chars percent-escaped inside fields) — unambiguous for ANY
+  * field content, including the comma-bearing job titles scraped CSV
+  * produces. */
 final class SkillsHttpServer(storeDir: String) {
 
+  // The JDK server writes a response's headers and body as two segments;
+  // with Nagle's algorithm on, a keep-alive client's delayed ACK stalls
+  // every response by ~40 ms. Read once, when the first server is built.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private val view = new FileKvStore.View(storeDir)
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   server.createContext("/skills", (ex: HttpExchange) => handle(ex))
 
@@ -58,20 +68,23 @@ final class SkillsHttpServer(storeDir: String) {
           case p if p.startsWith("/skills/") =>
             val jobId = java.net.URLDecoder.decode(
               p.stripPrefix("/skills/"), "UTF-8")
-            FileKvStore.read(storeDir).get(jobId) match {
+            view.snapshot().get(jobId) match {
               case Some(v) => respond(ex, 200, s"""{"data": ${rowJson(v)}}""")
               case None    => respond(ex, 404, """{"error": "not found"}""")
             }
           case _ => respond(ex, 404, """{"error": "not found"}""")
         }
       }
+    } catch {
+      case scala.util.control.NonFatal(e) if ex.getResponseCode < 0 =>
+        respond(ex, 500, s"""{"error": ${jstr(e.toString)}}""")
     } finally ex.close()
   }
 
   /** Q1 scan: (job_id, job) per published row, sorted by job then id for
     * a deterministic wire order. */
   private def listJobs(): String = {
-    val rows = FileKvStore.read(storeDir).toSeq
+    val rows = view.snapshot().toSeq
       .map { case (id, v) => (id, pairs(v).getOrElse("job", "")) }
       .sortBy { case (id, job) => (job, id) }
       .map { case (id, job) =>

@@ -1,6 +1,8 @@
 package graft
 
 import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import graft.sources.FileKvStore
 
@@ -75,5 +77,90 @@ class FileKvStoreSpec extends SparkTestBase {
     sink.put(Map("job_id" -> "j1", "job" -> "data engineer", "s1" -> "python"))
     val back = FileKvStore.read(dir)
     assert(back("j1") == "job=data engineer,job_id=j1,s1=python")
+  }
+
+  /** Appends raw bytes to a log file, bypassing the store's encoder. */
+  private def appendRaw(dir: String, name: String, text: String): Unit = {
+    Files.createDirectories(Paths.get(dir))
+    Files.write(Paths.get(dir, name), text.getBytes(UTF_8),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+  }
+
+  test("view equals a full replay when an older file is appended after a newer one") {
+    val dir = freshDir("view_interleaved")
+    val view = new FileKvStore.View(dir)
+    assert(view.snapshot().isEmpty)
+    val gen1 = new FileKvStore(dir)
+    gen1.upsert("a", "1")
+    gen1.upsert("b", "1")
+    assert(view.snapshot() == FileKvStore.read(dir))
+    Thread.sleep(5) // filename ordering is millisecond-granular
+    val gen2 = new FileKvStore(dir)
+    gen2.upsert("a", "2")
+    assert(view.snapshot() == Map("a" -> "2", "b" -> "1"))
+    // The older generation keeps writing after the newer file exists: its
+    // lines replay BEFORE gen2's, so `a` stays 2 while `b` and `c` move.
+    gen1.upsert("a", "3")
+    gen1.upsert("b", "3")
+    gen1.upsert("c", "3")
+    val expected = Map("a" -> "2", "b" -> "3", "c" -> "3")
+    assert(FileKvStore.read(dir) == expected)
+    assert(view.snapshot() == expected)
+    gen2.upsert("b", "4")
+    assert(view.snapshot() == FileKvStore.read(dir))
+    assert(view.snapshot()("b") == "4")
+  }
+
+  test("a torn trailing line is ignored until its newline lands") {
+    val dir = freshDir("view_torn")
+    val log = "log-0000000000001-torn.tsv"
+    appendRaw(dir, log, "k1\tv1\nk2\tv")
+    val view = new FileKvStore.View(dir)
+    assert(view.snapshot() == Map("k1" -> "v1"))
+    assert(FileKvStore.read(dir) == Map("k1" -> "v1"))
+    appendRaw(dir, log, "2\n")
+    assert(view.snapshot() == Map("k1" -> "v1", "k2" -> "v2"))
+    assert(FileKvStore.read(dir) == view.snapshot())
+    assert(view.skippedLines == 0)
+  }
+
+  test("a compact between two snapshots replays the view from scratch") {
+    val dir = freshDir("view_compact")
+    val gen1 = new FileKvStore(dir)
+    (1 to 5).foreach(i => gen1.upsert(s"k$i", "old"))
+    Thread.sleep(5)
+    new FileKvStore(dir).upsert("k3", "new")
+    val view = new FileKvStore.View(dir)
+    val before = view.snapshot()
+    FileKvStore.compact(dir)
+    assert(view.snapshot() == before)
+    Thread.sleep(5)
+    new FileKvStore(dir).upsert("k1", "newer")
+    assert(view.snapshot() == before.updated("k1", "newer"))
+    assert(view.snapshot() == FileKvStore.read(dir))
+  }
+
+  test("an undecodable line is skipped and counted, not fatal to every read") {
+    val dir = freshDir("view_bad_escape")
+    // `%` with no hex digits after it: URLDecoder's "Incomplete trailing
+    // escape". The lines around it, the empty key and the tab-less line
+    // are the other complete lines a reader cannot decode.
+    appendRaw(dir, "log-0000000000001-bad.tsv",
+      "ok1\tv1\nbad%\tv\n\tempty-key\nno-tab\nok2\tv%zz\nok3\tv3\n")
+    assert(FileKvStore.read(dir) == Map("ok1" -> "v1", "ok3" -> "v3"))
+    val view = new FileKvStore.View(dir)
+    assert(view.snapshot() == Map("ok1" -> "v1", "ok3" -> "v3"))
+    assert(view.skippedLines == 4)
+  }
+
+  test("upsert rejects an empty key with a named error") {
+    val dir = freshDir("empty_key")
+    val store = new FileKvStore(dir)
+    val e = intercept[IllegalArgumentException](store.upsert("", "v"))
+    assert(e.getMessage.contains("empty key"))
+    // A row without its key column would have been published under "".
+    intercept[IllegalArgumentException](
+      store.rowSink("job_id").put(Map("job" -> "no id")))
+    assert(FileKvStore.read(dir).isEmpty)
   }
 }

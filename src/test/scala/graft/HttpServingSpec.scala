@@ -135,4 +135,41 @@ class HttpServingSpec extends SparkTestBase {
       assert(resp.statusCode() == 405)
     }
   }
+
+  test("a publish made after the server started is visible on the next GET") {
+    val dir = freshDir("fresh")
+    new FileKvStore(dir).rowSink("job_id").put(Map("job_id" -> "j1", "job" -> "v1"))
+    withServer(dir) { srv =>
+      assert(get(srv.port, "/skills/j1")._2.contains(""""job": "v1""""))
+      assert(get(srv.port, "/skills/j2")._1 == 404)
+      Thread.sleep(5) // a newer log file, as the next daily publish writes
+      val sink = new FileKvStore(dir).rowSink("job_id")
+      sink.put(Map("job_id" -> "j1", "job" -> "v2"))
+      sink.put(Map("job_id" -> "j2", "job" -> "w1"))
+      val (c1, b1) = get(srv.port, "/skills/j1")
+      assert(c1 == 200 && b1.contains(""""job": "v2""""), b1)
+      val (c2, b2) = get(srv.port, "/skills/j2")
+      assert(c2 == 200 && b2.contains(""""job": "w1""""), b2)
+      assert(get(srv.port, "/skills")._2.contains(""""job_id": "j2""""))
+    }
+  }
+
+  test("an unreadable store answers 500 with the reason, then recovers") {
+    val dir = freshDir("unreadable")
+    new FileKvStore(dir).upsert("k1", "job=x")
+    withServer(dir) { srv =>
+      assert(get(srv.port, "/skills/k1")._1 == 200)
+      // A directory in the log namespace cannot be replayed.
+      val bad = new File(dir, "log-0000000000001-dir.tsv")
+      assert(bad.mkdir())
+      Seq("/skills/k1", "/skills").foreach { path =>
+        val (code, body) = get(srv.port, path)
+        assert(code == 500, body)
+        assert(body.startsWith("""{"error": """") && body.contains("not a regular file"),
+          body)
+      }
+      assert(bad.delete())
+      assert(get(srv.port, "/skills/k1")._1 == 200)
+    }
+  }
 }
