@@ -86,11 +86,6 @@ object Bench {
   private def quiesce(spark: SparkSession): Unit = {
     val sc = spark.sparkContext
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    // Driver-created broadcasts (the partitioned triangle blooms) are
-    // only reclaimed once GC proves the stub dead; destroy the tracked
-    // ones eagerly so repeated sweeps can't accumulate executor-resident
-    // copies (r15 advisor).
-    graft.core.Broadcasts.drain()
     System.gc(); Thread.sleep(120)
     System.gc(); Thread.sleep(60)
   }

@@ -195,7 +195,7 @@ object CatalogIndex {
     "q_dedup_jaccard_pre" -> "LSH bands read from a materialized band table",
     "q_graph_pagerank_pre" -> "PageRank over a materialized edge artifact (byte-identical twin)",
     "q_graph_reachability_pre" -> "2-hop BFS over src-bucketed edge artifact, DPP-pruned per level (byte-identical twin)",
-    "q_graph_triangles_pre" -> "bloom-pruned triangle count over a materialized oriented-adjacency artifact (byte-identical twin)",
+    "q_graph_triangles_pre" -> "generator-wedge triangle count closed by binary search against the broadcast adjacency, over a materialized oriented-adjacency artifact (byte-identical twin)",
     // ---- Bucketed -------------------------------------------------------
     "q_join_bucketed" -> "bucketed co-located join (zero-exchange sort-merge)",
     // ---- Sampling -------------------------------------------------------

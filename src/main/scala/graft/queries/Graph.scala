@@ -28,32 +28,6 @@ object Graph extends QueryGroup {
   /** 1e9 fixed-point scale for PageRank ranks. */
   private val Scale = 1000000000L
 
-  /** Canonical undirected co-purchase edges (src < dst), deduplicated.
-    * Per-order fanout is bounded by lines-per-order (≤ 7), so the
-    * self-join emits O(rows × lines-per-order) pair instances — never
-    * order-count × order-count. */
-  private[queries] def coEdges(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    // Basket form, not a self-join: ONE groupBy-orderkey shuffle builds
-    // per-order sorted item sets (collect_set partial-aggregates
-    // map-side), then the src < dst upper triangle explodes ROW-LOCALLY
-    // off the sorted array — bounded by C(lines-per-order, 2) ≤ C(7,2)
-    // pairs per order — before the pair distinct. The equi-self-join
-    // formulation shuffles lineitem twice and re-sorts both sides; this
-    // moves the fact table once (the q_assoc_rules basket move).
-    // The triangle explodes through two GENERATORS (posexplode anchor +
-    // slice-tail explode), not nested transform lambdas building a
-    // struct per pair: higher-order functions evaluate interpreted per
-    // element, and the r18 assoc_rules sub-probe priced the two forms
-    // at 0.91 vs 0.48 s on the same basket relation. slice is 1-based,
-    // so start i+2 with the 0-based posexplode index yields exactly the
-    // elements after src; the downstream distinct makes pair order
-    // irrelevant. Same rows, cheaper stage, for every coEdges consumer
-    // (pagerank, triangles, reachability, linkpred, and the
-    // materialized-artifact builders).
-    pairInstances(baskets(s, d)).distinct()
-  }
-
   /** Per-order sorted item sets — the single lineitem pass every graph
     * build starts from (r19: extracted so the builders below share it,
     * and so linkPred can checkpoint THIS tiny relation instead of the
@@ -66,11 +40,12 @@ object Graph extends QueryGroup {
       .select($"items")
   }
 
-  /** Canonical (src < dst) pair INSTANCES off the basket arrays —
-    * coEdges WITHOUT the final distinct. Row-local generator chain; a
-    * pair that co-occurs in k orders appears k times. Consumers that
-    * tolerate duplicates (existence joins, collect_set aggregations)
-    * read this directly and skip the (src, dst)-hash dedup exchange. */
+  /** Canonical (src < dst) pair INSTANCES off the basket arrays, not
+    * deduplicated. Row-local generator chain (posexplode anchor +
+    * slice-tail explode — the r18 assoc_rules sub-probe priced it at
+    * 0.48 s vs 0.91 s for nested transform lambdas); a pair that
+    * co-occurs in k orders appears k times. [[symAdjacency]]'s
+    * collect_set deduplicates them in its one groupBy. */
   private[queries] def pairInstances(b: DataFrame): DataFrame = {
     val s = b.sparkSession
     import s.implicits._
@@ -82,8 +57,10 @@ object Graph extends QueryGroup {
   /** One-shuffle symmetrized grouped adjacency (src, deg, nbrs), the r19
     * graph-build core: both edge directions are generated ROW-LOCALLY
     * off the baskets and a single groupBy(src) collect_set deduplicates,
-    * hash-partitions AND yields deg = size(nbrs) in the same pass. The
-    * r18 shape paid the coEdges (src, dst)-hash distinct exchange, then
+    * hash-partitions AND yields deg = size(nbrs) in the same pass. It is
+    * the graph family's ONE construction path: every graph query and
+    * every graph artifact in [[Materialized]] derives from it. The r18
+    * shape paid a separate (src, dst)-hash distinct exchange, then
     * re-derived degrees and partitioning with further exchanges per
     * consumer; every downstream relation (flat sym edges, canonical
     * pairs, the degree table) is a row-local projection/explode of this
@@ -116,7 +93,7 @@ object Graph extends QueryGroup {
     import s.implicits._
     // From-scratch path rides the one-shuffle symAdjacency (r19): the
     // grouped aggregate already carries deg, so the adjacency explode is
-    // row-local and coEdges' distinct exchange never happens
+    // row-local and the r18 pair-list distinct exchange never happens
     // (ProfileR19 pr2: 0.86×, old 2.449 → new 2.117 s, on TOP of the
     // one-pass-adjacency 0.90× this round — the materialized twin keeps
     // pagerankOver below, whose input is the already-deduplicated
@@ -148,7 +125,7 @@ object Graph extends QueryGroup {
     // deg×8 bytes of agg memory in one task — bounded for every
     // co-occurrence graph this engine declares (lines-per-order caps
     // fanout; the ×100 probe corpus max degree is ~10³), and the
-    // orientedEdges consumer already asserts deg < 2²³ for the same
+    // triangle orientation ([[rankPack]]) asserts deg < 2²³ for the same
     // reason. A graph with 100M-degree hubs would want the join form
     // back — that regime is named, not silently assumed away.
     val adj = edges.groupBy($"src").agg(collect_list($"dst").as("nbrs"))
@@ -189,55 +166,38 @@ object Graph extends QueryGroup {
       .limit(100)
   }
 
-  /** Degree-ordered oriented edge set: each undirected edge {u,v} is
-    * directed from the lower-rank to the higher-rank endpoint, where
-    * rank = (degree, id) lexicographic — PACKED into one long as
-    * `deg << 40 | id`, so rank comparison is a single long compare and
-    * the edge relation stays two columns. The packing requires ids in
-    * [0, 2⁴⁰) and degrees < 2²³ (the 32/32 split of rounds ≤11 capped
-    * ids at 2³², which the ×100 key-shifted probe corpus exceeds; 2⁴⁰
-    * covers key offsets to ×10000 while 8.4M max degree still dwarfs
-    * any co-occurrence graph's). Both bounds hold by construction here
-    * and the build asserts them per row, so a violation at larger scale
-    * fails loudly rather than miscounting (the unpacked (deg, id)
-    * struct form is the drop-in general fallback for arbitrary ids). Out-degree under degree orientation is bounded
-    * by O(√(2·|E|)) — the arboricity argument behind node-iterator++
-    * triangle counting — which is what tames wedge fanout on skewed
-    * graphs: a hub with degree h and a small id would otherwise sit on
-    * the left of all h of its edges and emit C(h,2) wedges. The deg
-    * relation is one row per node — broadcast both probes. */
+  /** Degree rank packed into one long as `deg << 40 | id`, so rank
+    * comparison is a single long compare and the oriented edge relation
+    * stays two columns. The packing requires ids in [0, 2⁴⁰) and degrees
+    * < 2²³ (the 32/32 split of rounds ≤11 capped ids at 2³², which the
+    * ×100 key-shifted probe corpus exceeds; 2⁴⁰ covers key offsets to
+    * ×10000 while 8.4M max degree still dwarfs any co-occurrence
+    * graph's). Both bounds hold by construction here and the build
+    * asserts them per row, so a violation at larger scale fails loudly
+    * rather than miscounting (the unpacked (deg, id) struct form is the
+    * drop-in general fallback for arbitrary ids). */
   private def rankPack(id: org.apache.spark.sql.Column,
       dg: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(id < 0 || id >= (1L << 40) || dg >= (1L << 23),
-      raise_error(lit("orientedEdges: rank packing out of range")))
+      raise_error(lit("triangles: rank packing out of range")))
       .otherwise(shiftleft(dg, 40).bitwiseOR(id))
       .cast("long")
 
-  private[queries] def orientedEdges(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    val deg = pairs.select($"src".as("node"))
-      .union(pairs.select($"dst".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
-    pairs
-      .join(broadcast(deg.select($"node".as("src"), $"deg".as("sdeg"))), "src")
-      .join(broadcast(deg.select($"node".as("dst"), $"deg".as("ddeg"))), "dst")
-      .select(
-        rankPack($"src", $"sdeg").as("r_src"),
-        rankPack($"dst", $"ddeg").as("r_dst"))
-      .select(
-        least($"r_src", $"r_dst").as("u"),
-        greatest($"r_src", $"r_dst").as("v"))
-  }
-
-  /** Oriented edges off a MATERIALIZED [[symAdjacency]] (r19): degrees
-    * already sit on the grouped rows, so the src-side deg is row-local
-    * and the canonical (src < dst) pairs are an explode + filter — one
-    * broadcast join (the dst-side deg) instead of orientedEdges' two,
-    * and no distinct or deg-union exchange anywhere upstream
-    * (ProfileR19 tri2: 0.93× on the whole triangle query, old 3.749 →
-    * new 3.473 s, on top of the generator-wedge 0.87×). */
-  private[queries] def orientedEdgesFromAdjacency(grouped: DataFrame): DataFrame = {
+  /** Grouped degree-oriented adjacency (u, sorted nbrs) off a
+    * MATERIALIZED [[symAdjacency]]: each undirected edge {a, b} is
+    * directed from the lower-rank to the higher-rank endpoint, rank =
+    * (degree, id) packed by [[rankPack]], and grouped on u with its
+    * out-neighbors sorted by rank — the layout the triangle core and the
+    * `q_graph_triangles_pre` artifact share. Degrees already sit on the
+    * grouped rows, so the src-side deg is row-local and the canonical
+    * (src < dst) pairs are an explode + filter; the dst-side deg is one
+    * broadcast join of the one-row-per-node relation. Out-degree under
+    * degree orientation is bounded by O(√(2·|E|)) — the arboricity
+    * argument behind node-iterator++ triangle counting — which is what
+    * tames wedge fanout on skewed graphs: a hub with degree h and a small
+    * id would otherwise sit on the left of all h of its edges and emit
+    * C(h,2) wedges. */
+  private[queries] def orientedAdjacency(grouped: DataFrame): DataFrame = {
     val s = grouped.sparkSession
     import s.implicits._
     grouped
@@ -248,16 +208,15 @@ object Graph extends QueryGroup {
       .select(
         rankPack($"src", $"sdeg").as("r_src"),
         rankPack($"dst", $"ddeg").as("r_dst"))
-      .select(
-        least($"r_src", $"r_dst").as("u"),
-        greatest($"r_src", $"r_dst").as("v"))
+      .groupBy(least($"r_src", $"r_dst").as("u"))
+      .agg(sort_array(collect_list(greatest($"r_src", $"r_dst"))).as("nbrs"))
   }
 
-  /** Global triangle count — the two-join motif shape over the
-    * DEGREE-ORDERED oriented edges: wedges (b, c) from two out-edges of
-    * the lowest-rank corner u (rank(b) < rank(c)), closed by probing the
-    * oriented edge b→c. Each triangle is counted exactly once, from its
-    * minimum-rank corner.
+  /** Global triangle count (node-iterator++) over the DEGREE-ORDERED
+    * oriented adjacency: wedges (b, c) are pairs of out-neighbors of the
+    * lowest-rank corner u with rank(b) < rank(c), and a wedge closes when
+    * c is an out-neighbor of b. Each triangle is counted exactly once,
+    * from its minimum-rank corner.
     *
     * Why degree ordering and not raw id order: wedge fanout per corner is
     * C(out-deg, 2), and degree orientation bounds out-deg by O(√(2|E|))
@@ -265,305 +224,54 @@ object Graph extends QueryGroup {
     * emit deg² wedges. On the sf0.1 co-purchase graph this cuts wedge
     * rows ~1.9x vs id order (GraphSpec pins the inequality).
     *
-    * Wedges still vastly outnumber triangles, so the closure join's
-    * exchange is THE cost: a bloom filter over the oriented edge set
-    * (`bloom_agg_exact` — same family as q_join_bloom's `bloom_agg`, but
-    * with explicit conf-free geometry) prunes non-closing wedges
-    * map-side, BEFORE they hit the wire. False positives just pass
-    * a few extra wedges to the exact join; the count is unchanged. */
+    * Build: two checkpoints, then the lazy core [[trianglesOverGrouped]].
+    * The symmetrized adjacency is read twice by the orientation (the
+    * exploded src rows and the broadcast dst degrees), and the grouped
+    * oriented adjacency (u, sorted nbrs) is read by both sides of the
+    * closure join, so each is materialized once. Leaving the oriented
+    * adjacency lazy re-runs the orientation under both consumers
+    * (2.5–2.6 s vs 1.7–1.8 s per triangles run on the catalog_mix slice,
+    * 4 cores); leaving the symmetrized one lazy measured no faster. */
   private def triangles(s: SparkSession, d: String): DataFrame =
-    trianglesWithBloomBucketItems(s, d, TriangleBloomBucketItems)
+    trianglesOverGrouped(
+      orientedAdjacency(symAdjacency(s, d).materialized).materialized)
 
-  /** Per-bucket item capacity of the partitioned closure bloom. 64M
-    * items ≈ 77 MB of bloom at 1% FP — large enough that every corpus
-    * up to ~64M oriented edges keeps the single-bucket plan (bucket
-    * count 1 degenerates to exactly the r14 scalar-bloom probe), small
-    * enough that each bucket's bit array stays far from the sketch
-    * library's Int-indexed ceiling. The test seam
-    * [[trianglesWithBloomBucketItems]] lowers this to force the
-    * multi-bucket path on the small fixtures. */
-  private[queries] val TriangleBloomBucketItems = 64000000L
-
-  /** Transport threshold for the single-bucket closure bloom: at or
-    * under this many oriented edges the bloom ships as a scalar-subquery
-    * plan literal; above it (and always when bucketed) it rides a real
-    * `Broadcast` probed by the codegen `bloom_bucket_probe`. The r16
-    * transport A/B (SCALE_PROBE.md r16 section) measured the literal
-    * plan fastest at 1.2M edges (sf0.1: 5.6 s vs 6.0 s broadcast) and
-    * the broadcast plan fastest by ×10 (12M edges: 24.7 s literal vs
-    * 19.7 s broadcast single-bucket / 19.2 s 4-bucket) — the literal's
-    * per-task rehydration and non-codegen probe grow with bloom bytes
-    * and wedge count, the broadcast's fixed cost does not. 4M edges
-    * (~4.8 MB bloom) splits the two measured regimes. */
-  private[queries] val TriangleScalarMaxEdges = 4000000L
-
-  /** EAGER-BUILD CONTRACT (r15/r16 advisors): whenever the BROADCAST
-    * transport is chosen — nBuckets > 1 OR edgeRows > `scalarMaxEdges`
-    * (so also the common single-bucket regime between 4M and 64M edges) —
-    * the per-bucket bloom-build jobs run DURING plan construction; this
-    * method is not purely lazy there. Building the plan without executing
-    * it still pays the bloom-build edge scans.
+  /** The triangle core over a grouped oriented adjacency (u, sorted
+    * nbrs) — checkpointed by the from-scratch query above, parquet-backed
+    * for the materialized twin (`q_graph_triangles_pre` in
+    * [[Materialized]]). One lazy plan: building it runs no Spark job.
     *
-    * Staleness is defused by a SNAPSHOT FINGERPRINT (r16): construction
-    * records (count, bit_xor(xxhash64(u, v))) of the materialized edge
-    * relation in the same pass that sizes the buckets, and the returned
-    * plan re-derives that pair per execution (a lazy 1-row aggregate
-    * crossJoin'd in, one cheap scan of the checkpointed blocks) and
-    * raises an error on mismatch instead of probing stale blooms. The
-    * mismatch is reachable in `graft.checkpoint.mode=disk`, where
-    * persist() keeps lineage and evicted blocks recompute from CHANGED
-    * source data (GraphSpec pins the throw); in `local` mode the
-    * localCheckpoint blocks are immutable-or-gone, so every execution is
-    * snapshot-consistent and the guard only costs the scan. The broadcast
-    * blooms are registered with [[graft.core.Broadcasts]] so measurement
-    * harnesses can destroy them deterministically after each collect. */
-  private[graft] def trianglesWithBloomBucketItems(
-      s: SparkSession, d: String, bucketItems: Long): DataFrame =
-    trianglesWithBloomConfig(s, d, bucketItems, TriangleScalarMaxEdges)
-
-  /** Full test seam: `bucketItems` sets the bucket geometry (as above) and
-    * `scalarMaxEdges` the TRANSPORT threshold — a single-bucket bloom at
-    * or under it ships as a scalar subquery (plan literal), anything else
-    * rides a real Broadcast probed by the codegen `bloom_bucket_probe`.
-    * The r16 probe measures the two transports independently of bucket
-    * count this way (scalarMaxEdges=0 forces broadcast at one bucket;
-    * Long.MaxValue forces the literal plan wherever nBuckets == 1). */
-  private[graft] def trianglesWithBloomConfig(
-      s: SparkSession, d: String, bucketItems: Long,
-      scalarMaxEdges: Long): DataFrame = {
-    import s.implicits._
-    org.apache.spark.sql.graft.GraftSqlFunctions.ensure(s)
-    // The oriented edge set has FOUR consumers (bloom build, wedge
-    // generation, closure probe, snapshot guard): checkpoint it ONCE, in
-    // GROUPED (u, sorted nbrs) form (r19) — the flat (u, v) relation is
-    // a row-local explode off the checkpointed arrays, and the wedge
-    // stage is a generator chain (posexplode anchor + slice-tail
-    // explode) instead of the r18 zero-exchange SELF-JOIN: the join,
-    // even co-partitioned and exchange-free, still paid a per-partition
-    // hash build + probe over the full edge relation per wedge row,
-    // while the generators emit each of the C(out-deg, 2) pairs straight
-    // off the sorted array (interleaved A/B `ProfileR19 tri`: 0.87×,
-    // old 3.761 s / new 3.264 s at sf0.1, arms hash-asserted — the same
-    // generator-beats-machinery result as r18's assoc_rules pair
-    // explode; slice is 1-based, so start i+2 off the 0-based posexplode
-    // index = exactly the elements after b, preserving b < c in rank
-    // order). groupBy(u) replaces the old repartition(u) — its output is
-    // already hash(u)-partitioned — and the array rows checkpoint
-    // strictly smaller than the exploded form.
-    // r19 second pass: the oriented edges come off a materialized
-    // symAdjacency (one shuffle builds dedup + degrees + partitioning;
-    // see orientedEdgesFromAdjacency) instead of orientedEdges(coEdges)
-    // — which paid the distinct exchange, a deg-union exchange and two
-    // broadcast joins, re-running coEdges' post-exchange dedup under
-    // each of its three consumers.
-    val grouped = symAdjacency(s, d).materialized
-    val gr = orientedEdgesFromAdjacency(grouped)
-      .groupBy($"u").agg(sort_array(collect_list($"v")).as("nbrs"))
-      .materialized
-    trianglesOverGrouped(gr, bucketItems, scalarMaxEdges)
-  }
-
-  /** The triangle core over any STABLE grouped oriented adjacency
-    * (u, sorted nbrs) — checkpointed by the from-scratch query above,
-    * parquet-backed for the materialized twin (`q_graph_triangles_pre`
-    * in [[Materialized]]). `gr` must be re-readable without recompute
-    * (the bloom build, wedge generation, closure side and snapshot
-    * guard all consume it). */
-  private[queries] def trianglesOverGrouped(
-      gr: DataFrame, bucketItems: Long, scalarMaxEdges: Long): DataFrame = {
+    *  - Wedges are a generator chain off each sorted array (posexplode
+    *    anchor + slice-tail explode): slice is 1-based, so start i+2 off
+    *    the 0-based posexplode index yields exactly the elements after b,
+    *    i.e. the C(out-deg, 2) pairs with rank(b) < rank(c). Generators
+    *    emit the pairs row-locally; the r18 wedge self-join paid a hash
+    *    build + probe over the full edge relation per wedge row.
+    *  - The closure joins the wedges to `gr` on the single key b = u and
+    *    checks the closing edge by binary search over the sorted nbrs
+    *    array (`sorted_contains_long`): the hash relation holds one row
+    *    per NODE, not one per edge, and each wedge probes one long key +
+    *    log₂(out-deg) compares. Degree orientation bounds the searched
+    *    arrays at O(√m).
+    *  - The build side is broadcast at every size, so the wedge stream
+    *    — the only relation here allowed to be huge — is never shuffled
+    *    or sorted: it streams from the generators through the probe into
+    *    the count partials. At the ×10 probe corpus (~12M oriented edges)
+    *    this ran 0.61× of the retired bloom-pruned SHUFFLE_HASH plan,
+    *    while a SHUFFLE_HASH closure without the bloom ran 1.77×
+    *    (SCALE_PROBE.md). The broadcast holds ~8 B per oriented edge; a
+    *    grouped adjacency that outgrows driver memory is unmeasured. */
+  private[graft] def trianglesOverGrouped(gr: DataFrame): DataFrame = {
     val s = gr.sparkSession
     import s.implicits._
-    org.apache.spark.sql.graft.GraftSqlFunctions.ensure(s)
-    val oe = gr.select($"u", explode($"nbrs").as("v"))
-    // Size the closure bloom from the ACTUAL edge count — one cheap scan
-    // of the just-checkpointed blocks. The fixed 4M sizing of rounds ≤11
-    // saturated at the ×100 probe corpus (~150M edges → ~100% false
-    // positives → the full multi-billion-row wedge relation reached the
-    // closure join and spilled the disk dry). A bloom sized for the data
-    // keeps the map-side prune effective at ANY corpus size. The
-    // aggregate is graft's `bloom_agg_exact` — explicit geometry baked
-    // into the plan at construction, NO session conf consulted: the r12
-    // variant had to raise spark.sql.optimizer.runtime.bloomFilter.
-    // maxNumItems/maxNumBits session-wide and never restored them, a
-    // cross-query side effect on any shared session.
-    //
-    // PARTITIONED above `bucketItems` edges (r15; the partitioned-bloom
-    // fallback rounds 12-14 only named in this comment): edges hash into
-    // `nBuckets` key ranges by pmod(xxhash64(u,v), nBuckets), one
-    // bloom_agg_exact scalar subquery per bucket, and wedges probe the
-    // bucket their own hash selects via a CASE over the subqueries —
-    // still entirely map-side (each scalar is computed once and cached
-    // by might_contain, zero wedge bytes moved for the prune). The CASE
-    // shape rather than a map<bucket, bloom> scalar because Spark's
-    // might_contain analyzer only accepts a constant or a DIRECT scalar
-    // subquery as the filter argument — element_at(subquery-map, k) is
-    // a DATATYPE_MISMATCH. Each bucket's bloom holds ~edges/nBuckets
-    // items, so no single bit array ever approaches the sketch
-    // library's Int-indexed bound and the FP rate stays at the designed
-    // 1% at ANY edge count (the single-bloom clamp degraded FP past
-    // ~2.1B edges and sat at a 2.4 GiB monolith well before that). An
-    // empty bucket aggregates to an EMPTY bloom → probe returns false,
-    // which is exact (empty bucket = the wedge's closing edge cannot
-    // exist). Build cost is nBuckets passes over the checkpointed edge
-    // blocks (each with the bucket predicate evaluated scan-side);
-    // total bloom bytes are unchanged by the split. At corpora where
-    // even the summed blooms outgrow broadcast budgets, the knob to
-    // turn is FPP (more FPs only cost extra exact-join probes), never
-    // correctness.
-    // One pass yields the edge count (bucket geometry + transport choice)
-    // AND the snapshot fingerprint the broadcast-transport plan re-checks
-    // per execution (see the EAGER-BUILD CONTRACT above).
-    val cntFp = oe.agg(count(lit(1)),
-      coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-    val edgeRows = cntFp.getLong(0)
-    val edgeFingerprint = cntFp.getLong(1)
-    val nBuckets = math.max(1L, (edgeRows + bucketItems - 1) / bucketItems).toInt
-    // 20% headroom over the mean bucket fill: xxhash64 spreads edges
-    // near-uniformly, so mean+20% keeps every bucket at-or-under its
-    // designed FP rate without re-counting per bucket. The capacity
-    // floor applies ONLY to the single-bucket plan: under the split the
-    // floor would multiply by bucket count (total bloom bytes growing
-    // ~nBuckets× past the single bloom's, for zero FP benefit), and
-    // because every bucket's bloom builds as a CONCURRENT scalar
-    // subquery whose partial-agg buffer is allocated full-size in every
-    // task, a floored 16-bucket build holds nBuckets × tasks × floorMB
-    // of live bit arrays at once — measured as a heap OOM at the ×10
-    // forced-bucket probe on an 8g driver. Per-bucket capacity scaled
-    // to actual fill keeps total bloom bytes (and peak build memory)
-    // constant under any split; in the production regime (buckets only
-    // above `bucketItems` edges) per-bucket fill is ≥ bucketItems/1.2
-    // anyway, so no floor is ever binding there.
-    val perBucket =
-      if (nBuckets == 1) math.max(4000000L, edgeRows * 6 / 5 + 1)
-      else math.max(65536L, edgeRows / nBuckets * 6 / 5 + 1)
-    // Per-invocation view names: two concurrent triangle runs on one
-    // session must not race on create/drop of a shared name
-    // (ConcurrencySpec interleaves this query with itself since r13).
-    // `gvn` is the checkpointed grouped adjacency (wedge generators read
-    // it); `vn` is its row-local flat explode (bloom build + closure
-    // side read it) — registering the derived view keeps the SQL below
-    // unchanged while everything resolves to the ONE checkpoint.
-    val vn = s"graph_oedges_${java.util.UUID.randomUUID.toString.take(8)}"
-    val gvn = s"graph_oadj_${java.util.UUID.randomUUID.toString.take(8)}"
-    gr.createOrReplaceTempView(gvn)
-    oe.createOrReplaceTempView(vn)
-    // Closure-join strategy from the same count. The wedge stream is
-    // the single thing in this plan that is allowed to be huge, so it
-    // must never be SORTED (sort-merge would buffer/spill it) and
-    // ideally never shuffled either: up to ~128 MB of edges (8M rows ×
-    // 16 B), BROADCAST the edge side — wedges are then probed fully
-    // map-side, zero wedge bytes on the wire, which on a cluster beats
-    // shuffling a wedge stream that outnumbers edges by orders of
-    // magnitude (the 10 MB autoBroadcast default is calibrated for
-    // fact×dim, not for avoiding a multi-billion-row shuffle). Past
-    // that, SHUFFLE_HASH with the edge side as build — the wedges
-    // shuffle but still stream through the probe, never sort.
-    //
-    // The closure side is the GROUPED adjacency joined on the single
-    // key u, with the closing edge verified by binary search over the
-    // sorted nbrs array (graft's `sorted_contains_long`) — NOT the flat
-    // (u, v) view hashed on the pair key (r19 second pass; A/B
-    // 0.76×/0.78× across two fresh JVMs, ProfileR19 tri3). Same bytes
-    // transported, but the hash relation holds one row per NODE instead
-    // of one per EDGE (~60× fewer at sf0.1), so the broadcast collect +
-    // build shrink accordingly, and each wedge probes one long key +
-    // log₂(out-deg) compares instead of hashing the pair. Degree
-    // orientation bounds the searched arrays at O(√m); binary search
-    // makes even that worst case ~23 compares at 100 TB edge counts.
-    val closureHint =
-      if (edgeRows <= 8000000L) "/*+ BROADCAST(bc) */"
-      else "/*+ SHUFFLE_HASH(bc) */"
-    // nBuckets == 1 keeps the exact single-scalar probe (no pmod filter
-    // on the build scan) — the common plan for every corpus under
-    // `bucketItems` edges.
-    //
-    // nBuckets > 1 does NOT use per-bucket scalar subqueries: a scalar
-    // subquery result is pasted into the plan as a LITERAL and ships
-    // inside every fused stage's serialized task binary, rehydrated per
-    // task — measured at the ×100 probe corpus (119.6M edges, 2 buckets
-    // of ~82 MB) as a 328.8 MiB wedge-stage task binary (the CASE form
-    // landed the bloom bytes in two stages, one of them twice) that
-    // OOMed a 48g heap the single-bloom plan runs in comfortably.
-    // Instead the per-bucket blooms are built SEQUENTIALLY (one
-    // bounded-memory aggregate job per bucket — never nBuckets
-    // concurrent full-size partial buffers), pulled to the driver (the
-    // same bytes a scalar subquery would have moved there anyway), and
-    // shipped as a real Broadcast[Array[BloomFilter]]: block-manager
-    // torrent, ONE shared copy per executor, a stub in the task binary.
-    // Wedges probe their key-selected bucket via the codegen
-    // `bloom_bucket_probe` expression — same pmod the build groups by.
-    // At corpora where even the summed blooms outgrow the broadcast
-    // budget (~1.2 B per edge at 1% FPP), the knob to turn is FPP (more
-    // FPs only cost extra exact-join probes), never correctness.
-    val out =
-      if (nBuckets == 1 && edgeRows <= scalarMaxEdges) {
-        s.sql(s"""
-          WITH w AS (
-            SELECT b, c
-            FROM $gvn
-            LATERAL VIEW posexplode(nbrs) p AS i, b
-            LATERAL VIEW explode(slice(nbrs, i + 2, size(nbrs))) q AS c
-            WHERE bloom_might_contain(
-              (SELECT bloom_agg_exact(xxhash64(u, v), $perBucket) FROM $vn),
-              xxhash64(b, c))
-          )
-          SELECT $closureHint COUNT(*) AS n_triangles
-          FROM w JOIN $gvn bc
-            ON w.b = bc.u AND sorted_contains_long(bc.nbrs, w.c)""")
-      } else {
-        val bloomBytes = (0 until nBuckets).map { b =>
-          s.sql(
-            s"""SELECT bloom_agg_exact(xxhash64(u, v), $perBucket)
-               |FROM $vn WHERE pmod(xxhash64(u, v), $nBuckets) = $b"""
-              .stripMargin)
-            .head().getAs[Array[Byte]](0)
-        }
-        // Deserialize once on the driver; the broadcast re-serializes
-        // compactly and every executor rehydrates exactly one copy. An
-        // empty bucket yields an empty bloom -> probe false, which is
-        // exact (the wedge's closing edge cannot exist in that bucket).
-        val blooms = graft.core.Broadcasts.track(s.sparkContext.broadcast(
-          bloomBytes.map(bs => org.apache.spark.util.sketch.BloomFilter
-            .readFrom(bs)).toArray))
-        val wedges = gr
-          .select($"nbrs", posexplode($"nbrs").as(Seq("i", "b")))
-          .select($"b",
-            explode(slice($"nbrs", $"i" + lit(2), size($"nbrs"))).as("c"))
-          .where(org.apache.spark.sql.graft.BloomBucketProbe
-            .probe(xxhash64(col("b"), col("c")), blooms))
-        val bc =
-          if (edgeRows <= 8000000L) broadcast(gr.as("bc"))
-          else gr.as("bc").hint("shuffle_hash")
-        // Snapshot guard (EAGER-BUILD CONTRACT): re-derive the edge
-        // relation's (count, fingerprint) lazily — so per EXECUTION, not
-        // per construction — and fail loudly if it no longer matches what
-        // the blooms were built from. One extra 16-byte-per-row scan of
-        // the checkpointed blocks; the 1-row aggregate rides the
-        // established crossJoin(broadcast(tiny-agg)) scalar shape.
-        val guard = oe.agg(count(lit(1)).as("__edge_cnt"),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("__edge_fp"))
-        wedges.join(bc, col("b") === col("bc.u") &&
-            org.apache.spark.sql.graft.SortedContainsLong
-              .sortedContainsLong(col("bc.nbrs"), col("c")))
-          .agg(count(lit(1)).as("n_triangles"))
-          .crossJoin(broadcast(guard))
-          .select(when(
-            col("__edge_cnt") === lit(edgeRows) &&
-              col("__edge_fp") === lit(edgeFingerprint),
-            col("n_triangles"))
-            .otherwise(raise_error(lit(
-              "triangles: edge snapshot changed since plan construction " +
-                "— the eager-built closure blooms are stale; rebuild the " +
-                "plan (graft.checkpoint.mode=disk recomputes evicted " +
-                "blocks from source)")))
-            .as("n_triangles"))
-      }
-    // Analysis has inlined the views; drop them so the checkpointed
-    // blocks are collectable once the result is dropped (same as
-    // reachability).
-    s.catalog.dropTempView(vn)
-    s.catalog.dropTempView(gvn)
-    out
+    val wedges = gr
+      .select($"nbrs", posexplode($"nbrs").as(Seq("i", "b")))
+      .select($"b",
+        explode(slice($"nbrs", $"i" + lit(2), size($"nbrs"))).as("c"))
+    wedges.join(broadcast(gr.as("bc")), $"b" === col("bc.u") &&
+        org.apache.spark.sql.graft.SortedContainsLong
+          .sortedContainsLong(col("bc.nbrs"), $"c"))
+      .agg(count(lit(1)).as("n_triangles"))
   }
 
   /** Bounded BFS reachability via a RECURSIVE CTE (new SQL surface in
@@ -588,7 +296,7 @@ object Graph extends QueryGroup {
     // ~4 edge-build executions (anchor scalar + one per level). The
     // iterative executor should walk a built graph, not rebuild it.
     // r19: the build rides symAdjacency — one groupBy(src) shuffle
-    // dedups, partitions AND symmetrizes (the r18 form paid coEdges'
+    // dedups, partitions AND symmetrizes (the r18 form paid the pair list's
     // (src,dst) distinct exchange, ran its post-exchange dedup once per
     // union branch, then repartitioned on src: ProfileR19 reach A/B
     // 0.93×, old 3.386 → new 3.132 s).
@@ -656,14 +364,14 @@ object Graph extends QueryGroup {
     * chain straight off that array (sorted ascending, so node_a < node_b
     * falls out of the generator order), and the anti-join probe side is
     * a row-local explode filtered dst > src. The r18 shape paid the
-    * coEdges (src, dst)-hash distinct + a 1.2M-row pair checkpoint + a
+    * pair-list (src, dst)-hash distinct + a 1.2M-row pair checkpoint + a
     * separate capped groupBy + repartition(u) checkpoint + the wedge
     * SELF-JOIN machinery; all of that collapses into the one adjacency
     * groupBy. Interleaved A/B (ProfileR19 lp3, arms hash-asserted,
     * sf0.1): 0.64× and 0.74× across two fresh JVMs.
     *
     * Why this won where two near-identical r19 candidates measured
-    * parity: `lp` kept the coEdges checkpoint AND added a second grouped
+    * parity: `lp` kept the pair-list checkpoint AND added a second grouped
     * checkpoint (generator saving inside noise); `lp2` dropped the
     * checkpoints but re-generated the pair-instance stream three times.
     * Here the instance stream is generated ONCE (into the symAdjacency

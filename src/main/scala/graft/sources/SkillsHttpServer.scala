@@ -65,10 +65,10 @@ final class SkillsHttpServer(storeDir: String) {
         val path = ex.getRequestURI.getPath.stripSuffix("/")
         path match {
           case "/skills" => respond(ex, 200, listJobs())
+          // getPath is already percent-decoded: the id is used as is
+          // (a second decode would turn '+' into ' ' and fail on '%').
           case p if p.startsWith("/skills/") =>
-            val jobId = java.net.URLDecoder.decode(
-              p.stripPrefix("/skills/"), "UTF-8")
-            view.snapshot().get(jobId) match {
+            view.snapshot().get(p.stripPrefix("/skills/")) match {
               case Some(v) => respond(ex, 200, s"""{"data": ${rowJson(v)}}""")
               case None    => respond(ex, 404, """{"error": "not found"}""")
             }

@@ -50,87 +50,6 @@ class GraphSpec extends SparkTestBase {
     assert(got == expected && got > 0)
   }
 
-  /** Typed plan-shape probe (r15 advisor: match the expression TREE, not
-    * the plan's string rendering — a prettyName change must not fail the
-    * pin, and a regressed plan that merely mentions the string must not
-    * pass it): walk every physical node's expressions, counting real
-    * [[org.apache.spark.sql.graft.BloomBucketProbe]] instances and real
-    * Spark `BloomFilterMightContain` instances (the scalar-literal
-    * transport). AQE wrappers are walked into via their executed plans. */
-  private def bloomExprCounts(
-      df: org.apache.spark.sql.DataFrame): (Int, Int) = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
-    var probe = 0
-    var literal = 0
-    def walkExpr(e: Expression): Unit = {
-      e match {
-        case _: org.apache.spark.sql.graft.BloomBucketProbe => probe += 1
-        case _: BloomFilterMightContain => literal += 1
-        case _ => ()
-      }
-      e.children.foreach(walkExpr)
-    }
-    def walkPlan(p: SparkPlan): Unit = p.foreach {
-      case a: AdaptiveSparkPlanExec => walkPlan(a.executedPlan)
-      case node => node.expressions.foreach(walkExpr)
-    }
-    walkPlan(df.queryExecution.executedPlan)
-    (probe, literal)
-  }
-
-  test("partitioned closure bloom (forced multi-bucket) keeps the count") {
-    // The default plan keeps one bloom bucket until ~64M edges; force the
-    // partitioned path on the tiny fixture by shrinking the per-bucket
-    // item capacity below the fixture's edge count (>= 2 buckets, plus
-    // wedge probes landing in empty buckets → NULL bloom → filtered),
-    // and pin that the count is identical to the independent enumeration
-    // the single-bucket test above is checked against.
-    val nbrs = edges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-      .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
-    val expected = edges.toSeq.map { case (a, b) =>
-      (nbrs(a) & nbrs(b)).count(c => c > b)
-    }.sum.toLong
-    // edges.size == the oriented edge count, so size/3 forces >= 3
-    // buckets (capacity scaled to the per-bucket fill since r15 — the
-    // 4M single-bloom floor multiplied across buckets and OOMed the
-    // forced ×10 probe).
-    val forcedDf = graft.queries.Graph
-      .trianglesWithBloomBucketItems(spark, Sf0001,
-        bucketItems = math.max(1L, edges.size / 3L))
-    // The bucketed path must probe through the broadcast expression, not
-    // scalar-subquery literals: bloom bytes in the plan ship inside every
-    // fused stage's task binary (measured 328.8 MiB at the ×100 corpus).
-    val (probes, literals) = bloomExprCounts(forcedDf)
-    assert(probes >= 1,
-      s"expected the broadcast bloom probe expression in the plan:\n" +
-        forcedDf.queryExecution.executedPlan)
-    assert(literals == 0,
-      "bucketed path must not embed bloom literals via scalar subqueries")
-    val forced = forcedDf.collect()(0).getLong(0)
-    assert(forced == expected && forced > 0)
-  }
-
-  test("broadcast transport at ONE bucket keeps the count (r16 threshold)") {
-    // Above TriangleScalarMaxEdges the default plan keeps nBuckets == 1
-    // but ships the bloom as a Broadcast instead of a scalar-subquery
-    // plan literal (the r16 transport A/B: a wash at 1.2M edges, ~8%
-    // faster at 12M, 1.66x at 120M where the literal also OOMs). Force
-    // that transport on the fixture and pin count equality plus the
-    // plan shape (broadcast probe, no literal).
-    val nbrs = edges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-      .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
-    val expected = edges.toSeq.map { case (a, b) =>
-      (nbrs(a) & nbrs(b)).count(c => c > b)
-    }.sum.toLong
-    val df = graft.queries.Graph.trianglesWithBloomConfig(
-      spark, Sf0001, bucketItems = Long.MaxValue, scalarMaxEdges = 0L)
-    val (probes, literals) = bloomExprCounts(df)
-    assert(probes >= 1 && literals == 0)
-    assert(df.collect()(0).getLong(0) == expected)
-  }
-
   test("degree orientation emits no more wedges than id orientation") {
     // The triangle query's wedge stage fans out C(out-deg, 2) per corner;
     // degree-ordered orientation bounds out-deg by arboricity where raw id
@@ -188,29 +107,43 @@ class GraphSpec extends SparkTestBase {
     assert(missed == 0)
   }
 
-  test("stale-bloom guard: in-place data swap throws on re-execution (disk mode)") {
-    // The EAGER-BUILD CONTRACT's one silent-wrong-answer window: under
-    // graft.checkpoint.mode=disk, evicted blocks recompute FROM SOURCE,
-    // so a source overwritten IN PLACE (same object keys, same lengths —
-    // the S3 overwrite scenario the cached file listing cannot detect;
-    // a local-FS rewrite changes part filenames and already fails loudly
-    // at the scan) would feed NEW wedges through the construction-time
-    // blooms. The snapshot-fingerprint guard must turn that into a loud
-    // error, never an undercount.
+  /** Independent triangle count over an arbitrary (order, part) corpus. */
+  private def triangleCount(rows: Seq[(Long, Long)]): Long = {
+    val es = rows.groupBy(_._1).values.flatMap { lines =>
+      val parts = lines.map(_._2).distinct
+      for (a <- parts; b <- parts if a < b) yield (a, b)
+    }.toSet
+    val nbrs = es.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSet }
+    es.toSeq.map { case (a, b) => (nbrs(a) & nbrs(b)).count(_ > b) }.sum.toLong
+  }
+
+  test("in-place data swap recovers exactly on re-execution (disk mode)") {
+    // Under graft.checkpoint.mode=disk, evicted blocks recompute FROM
+    // SOURCE, so a source overwritten IN PLACE (same object keys, same
+    // lengths — the S3 overwrite scenario the cached file listing cannot
+    // detect; a local-FS rewrite changes part filenames and already fails
+    // loudly at the scan) feeds the new rows into a re-executed plan. The
+    // triangle plan holds no state computed at construction, so the
+    // re-execution must count the NEW corpus exactly.
     import java.nio.file.{Files => JF, StandardCopyOption}
-    val dir = JF.createTempDirectory("graft-bloomswap")
-    val staging = JF.createTempDirectory("graft-bloomswap-b")
+    val dir = JF.createTempDirectory("graft-triswap")
+    val staging = JF.createTempDirectory("graft-triswap-b")
     // Two corpora with byte-identical parquet layout: the orderkey column
     // sequence is shared, the partkey column holds the same value multiset
-    // in a different order (corpus B re-pairs each order's third item with
-    // the NEXT order), so dictionary + data page sizes match and only the
-    // content differs — exactly what a listing-cache scan cannot see.
-    def corpus(rePair: Boolean): Seq[(Long, Long)] = {
-      val third = (o: Long) => 200L + ((if (rePair) o + 1 else o) % 12)
+    // in a different order with no repeated neighbours (corpus B trades
+    // each even order's second item for the next order's first item, which
+    // breaks a quarter of the triangles), so dictionary + data page sizes
+    // match and only the content differs — exactly what a listing-cache
+    // scan cannot see.
+    def corpus(rePair: Boolean): Seq[(Long, Long)] =
       (0L until 48L).flatMap { o =>
-        Seq(o -> (100L + o % 8), o -> (150L + o % 6), o -> third(o))
+        val items =
+          if (!rePair) Seq(100L + o % 8, 150L + o % 6)
+          else if (o % 2 == 0) Seq(100L + o % 8, 100L + (o + 1) % 8)
+          else Seq(150L + (o - 1) % 6, 150L + o % 6)
+        (items :+ (200L + o % 12)).map(o -> _)
       }
-    }
     def write(rows: Seq[(Long, Long)], path: String): java.nio.file.Path = {
       spark.createDataFrame(rows).toDF("l_orderkey", "l_partkey")
         .coalesce(1).write.option("compression", "uncompressed")
@@ -219,6 +152,10 @@ class GraphSpec extends SparkTestBase {
       JF.list(java.nio.file.Paths.get(path)).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
     }
+    val (expectedA, expectedB) =
+      (triangleCount(corpus(rePair = false)), triangleCount(corpus(rePair = true)))
+    assert(expectedA != expectedB,
+      s"fixture corpora must differ in triangle count: $expectedA")
     val partA = write(corpus(rePair = false), s"$dir/lineitem.parquet")
     val partB = write(corpus(rePair = true), s"$staging/lineitem.parquet")
     assert(JF.size(partA) == JF.size(partB),
@@ -226,11 +163,8 @@ class GraphSpec extends SparkTestBase {
         s"in-place swap: ${JF.size(partA)} vs ${JF.size(partB)}")
     spark.conf.set(graft.core.Checkpoints.ModeKey, "disk")
     try {
-      // scalarMaxEdges = 0 forces the broadcast transport (the eager
-      // bloom build + guard) at the fixture's single bucket.
-      val df = graft.queries.Graph.trianglesWithBloomConfig(
-        spark, dir.toString, bucketItems = Long.MaxValue, scalarMaxEdges = 0L)
-      assert(df.collect()(0).getLong(0) >= 0L)
+      val df = SparkEntry.queries("q_graph_triangles")(spark, dir.toString)
+      assert(df.collect()(0).getLong(0) == expectedA)
       // Swap content under the SAME file name and length, drop the local
       // checksum sidecars (content changed), evict the persisted blocks.
       JF.copy(partB, partA, StandardCopyOption.REPLACE_EXISTING)
@@ -240,21 +174,14 @@ class GraphSpec extends SparkTestBase {
         .foreach(JF.delete)
       spark.catalog.clearCache()
       // Re-execute through a DERIVED plan: re-collecting the same Dataset
-      // object reuses its physical plan's cached exchange results (still
-      // snapshot-consistent), but composing the held logical plan into
-      // any new query — the way a user actually reuses a DataFrame —
-      // plans fresh exchanges that recompute from the swapped source.
-      val ex = intercept[Throwable](df.where(lit(true)).collect())
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil
-        else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      assert(msgs(ex).exists(_.contains("edge snapshot changed")),
-        s"expected the stale-bloom guard, got: ${msgs(ex).mkString(" | ")}")
-      // A FRESH construction over the swapped data must succeed — the
-      // guard rejects stale re-execution, not the new corpus.
-      val fresh = graft.queries.Graph.trianglesWithBloomConfig(
-        spark, dir.toString, bucketItems = Long.MaxValue, scalarMaxEdges = 0L)
-      assert(fresh.collect()(0).getLong(0) >= 0L)
+      // object reuses its physical plan's cached exchange results, but
+      // composing the held logical plan into any new query — the way a
+      // user actually reuses a DataFrame — plans fresh exchanges that
+      // recompute from the swapped source.
+      assert(df.where(lit(true)).collect()(0).getLong(0) == expectedB)
+      // A fresh construction over the swapped data agrees.
+      assert(SparkEntry.queries("q_graph_triangles")(spark, dir.toString)
+        .collect()(0).getLong(0) == expectedB)
     } finally {
       spark.conf.set(graft.core.Checkpoints.ModeKey, "local")
     }

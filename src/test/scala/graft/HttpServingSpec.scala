@@ -136,6 +136,29 @@ class HttpServingSpec extends SparkTestBase {
     }
   }
 
+  test("a '+' in a job id is looked up literally, not as a space") {
+    val dir = freshDir("plus")
+    val store = new FileKvStore(dir)
+    store.upsert("a+b", "job=plus")
+    store.upsert("a b", "job=space")
+    withServer(dir) { srv =>
+      val (code, body) = get(srv.port, "/skills/a+b")
+      assert(code == 200 && body.contains(""""job": "plus""""), body)
+      val (sc, sb) = get(srv.port, "/skills/a%20b")
+      assert(sc == 200 && sb.contains(""""job": "space""""), sb)
+    }
+  }
+
+  test("an id that decodes to a stray '%' is 404, not 500") {
+    val dir = freshDir("pct")
+    new FileKvStore(dir).upsert("k1", "job=x")
+    withServer(dir) { srv =>
+      val (code, body) = get(srv.port, "/skills/%25zz")
+      assert(code == 404, body)
+      assert(body == """{"error": "not found"}""")
+    }
+  }
+
   test("a publish made after the server started is visible on the next GET") {
     val dir = freshDir("fresh")
     new FileKvStore(dir).rowSink("job_id").put(Map("job_id" -> "j1", "job" -> "v1"))

@@ -19,6 +19,11 @@ import org.apache.spark.sql.functions._
   * so every row starts from a pristine JVM. Not a Spec; excluded from
   * the test surface. */
 object ProfileR18 {
+  /** The r18 canonical pair list (pair instances + distinct); the
+    * catalog builds every graph off Graph.symAdjacency. */
+  private def coEdges(s: SparkSession, d: String): DataFrame =
+    Graph.pairInstances(Graph.baskets(s, d)).distinct()
+
   def main(args: Array[String]): Unit = {
     val part = args.headOption.getOrElse("full")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -514,7 +519,7 @@ object ProfileR18 {
         // disengaged), so the delta IS the count job.
         def lpOld(): DataFrame = {
           import graft.core.Checkpoints.MaterializeOps
-          val pairs = Graph.coEdges(spark, sfDir).materialized
+          val pairs = coEdges(spark, sfDir).materialized
           val sym = pairs.union(pairs.select($"dst".as("src"), $"src".as("dst")))
           val capped = sym.groupBy($"src")
             .agg(slice(sort_array(collect_set($"dst")), 1,
@@ -563,7 +568,7 @@ object ProfileR18 {
               y => struct(x.as("src"), y.as("dst")))))).as("p"))
           .select($"p.src".as("src"), $"p.dst".as("dst"))
           .distinct()
-        def coeNew(): DataFrame = Graph.coEdges(spark, sfDir)
+        def coeNew(): DataFrame = coEdges(spark, sfDir)
         def hc(df: DataFrame): Long = {
           val h = xxhash64(df.columns.map(col): _*)
           df.select(h.as("h")).agg(expr("bit_xor(h)"))
@@ -592,7 +597,7 @@ object ProfileR18 {
         // the cell affordable at ~5-min-per-run scale.
         def lpOld1(): DataFrame = {
           import graft.core.Checkpoints.MaterializeOps
-          val pairs = Graph.coEdges(spark, sfDir).materialized
+          val pairs = coEdges(spark, sfDir).materialized
           val sym1 = pairs.union(
             pairs.select($"dst".as("src"), $"src".as("dst")))
           val capped = sym1.groupBy($"src")
@@ -641,13 +646,13 @@ object ProfileR18 {
         println(old7.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
         println("================ coedges NEW (generators) ================")
-        println(Graph.coEdges(spark, sfDir).queryExecution.explainString(
+        println(coEdges(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       case "lpcount" =>
         // Bare cost of the linkPred transport-sizing count: one count()
         // job over the just-checkpointed capped adjacency at sf0.1.
         import graft.core.Checkpoints.MaterializeOps
-        val pairsLc = Graph.coEdges(spark, sfDir).materialized
+        val pairsLc = coEdges(spark, sfDir).materialized
         val symLc = pairsLc.union(
           pairsLc.select($"dst".as("src"), $"src".as("dst")))
         val cappedLc = symLc.groupBy($"src")

@@ -21,6 +21,8 @@ import org.apache.spark.sql.functions._
   *          one Generate chain.
   *  - tri:  same move for triangles' wedge stage (checkpoint the GROUPED
   *          oriented adjacency; flat edge view = row-local explode).
+  *          Its arm (and trix20) left with the closure bloom; git
+  *          history keeps them.
   *  - pr:   pagerankOver builds adj as edges ⋈ deg + repartition (deg
   *          shuffle + join + repartition exchange); ONE groupBy-
   *          collect_list pass gives deg = size(nbrs) row-locally and
@@ -35,6 +37,12 @@ import org.apache.spark.sql.functions._
   * Not a Spec; driven via `sbt Test/runMain graft.queries.ProfileR19 <part>`.
   */
 object ProfileR19 {
+  /** The r18 canonical pair list (pair instances + distinct) the r18
+    * reference arms start from; the catalog builds every graph off
+    * Graph.symAdjacency. */
+  private def coEdges(s: SparkSession, d: String): DataFrame =
+    Graph.pairInstances(Graph.baskets(s, d)).distinct()
+
   def main(args: Array[String]): Unit = {
     val part = args.headOption.getOrElse("warm")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -88,7 +96,7 @@ object ProfileR19 {
 
     // linkPred with generator wedges off the (src, nbrs) array.
     def lpNew(): DataFrame = {
-      val pairs = Graph.coEdges(spark, sfDir).materialized
+      val pairs = coEdges(spark, sfDir).materialized
       val sym = pairs.union(pairs.select($"dst".as("src"), $"src".as("dst")))
       val cappedArr = sym.groupBy($"src")
         .agg(slice(sort_array(collect_set($"dst")), 1, Graph.LinkPredCap)
@@ -104,38 +112,9 @@ object ProfileR19 {
         .limit(Graph.LinkPredTopK)
     }
 
-    // triangles, single-bucket scalar path (sf0.1 regime), generator wedges
-    // off the grouped oriented adjacency; flat edges = row-local explode.
-    def triNew(): DataFrame = {
-      org.apache.spark.sql.graft.GraftSqlFunctions.ensure(spark)
-      val gr = Graph.orientedEdges(Graph.coEdges(spark, sfDir))
-        .groupBy($"u").agg(sort_array(collect_list($"v")).as("nbrs"))
-        .materialized
-      val oe = gr.select($"u", explode($"nbrs").as("v"))
-      val cnt = oe.agg(count(lit(1))).head().getLong(0)
-      val perBucket = math.max(4000000L, cnt * 6 / 5 + 1)
-      val gvn = s"g19_${java.util.UUID.randomUUID.toString.take(8)}"
-      gr.createOrReplaceTempView(gvn)
-      val out = spark.sql(s"""
-        WITH f AS (SELECT u, v FROM $gvn LATERAL VIEW explode(nbrs) t AS v),
-        w AS (
-          SELECT b, c
-          FROM $gvn
-          LATERAL VIEW posexplode(nbrs) p AS i, b
-          LATERAL VIEW explode(slice(nbrs, i + 2, size(nbrs))) q AS c
-          WHERE bloom_might_contain(
-            (SELECT bloom_agg_exact(xxhash64(u, v), $perBucket) FROM f),
-            xxhash64(b, c))
-        )
-        SELECT /*+ BROADCAST(bc) */ COUNT(*) AS n_triangles
-        FROM w JOIN f bc ON w.b = bc.u AND w.c = bc.v""")
-      spark.catalog.dropTempView(gvn)
-      out
-    }
-
     // pagerank with the one-pass adjacency build.
     def prNew(): DataFrame = {
-      val pairs = Graph.coEdges(spark, sfDir)
+      val pairs = coEdges(spark, sfDir)
       val edges = pairs.union(pairs.select($"dst".as("src"), $"src".as("dst")))
       val adj = edges.groupBy($"src").agg(collect_list($"dst").as("nbrs"))
         .select($"src", size($"nbrs").cast("long").as("deg"),
@@ -213,11 +192,7 @@ object ProfileR19 {
           .foreach(n => time(n)(q(n)))
         // stage attributions
         time("coedges_build") {
-          Graph.coEdges(spark, sfDir).agg(count(lit(1)).as("n"))
-        }
-        time("oriented_build") {
-          Graph.orientedEdges(Graph.coEdges(spark, sfDir))
-            .agg(count(lit(1)).as("n"))
+          coEdges(spark, sfDir).agg(count(lit(1)).as("n"))
         }
         time("cont_ex_build") {
           import org.apache.spark.sql.graft.ShingleHashSet.shingleHashes
@@ -248,8 +223,8 @@ object ProfileR19 {
           }.sorted
           println(f"PROFR19 $name%-24s median=${ts(2)}%.3f min=${ts.head}%.3f max=${ts.last}%.3f")
         }
-        timeIt("lp_pairs_ckpt") { Graph.coEdges(spark, sfDir).materialized; () }
-        val pairsM = Graph.coEdges(spark, sfDir).materialized
+        timeIt("lp_pairs_ckpt") { coEdges(spark, sfDir).materialized; () }
+        val pairsM = coEdges(spark, sfDir).materialized
         val symM = pairsM.union(pairsM.select($"dst".as("src"), $"src".as("dst")))
         timeIt("lp_capped_ckpt") {
           symM.groupBy($"src")
@@ -457,7 +432,7 @@ object ProfileR19 {
         // job — the final query plan starts at the checkpoint scan and is
         // identical before/after. Dump the adjacency-build plans
         // themselves so the claim is verifiable.
-        val pairs = Graph.coEdges(spark, sfDir)
+        val pairs = coEdges(spark, sfDir)
         val edges = pairs.union(pairs.select($"dst".as("src"), $"src".as("dst")))
         val degOld = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
         val adjOld = edges.join(degOld, "src").repartition($"src")
@@ -482,7 +457,7 @@ object ProfileR19 {
         // A/Bs above were the keep/revert gates; this is the
         // end-of-round composed factor per query, same discipline
         // (interleaved, one JVM, median-of-7, hash-asserted).
-        def coEdgesR18(): DataFrame = Graph.coEdges(spark, sfDir)
+        def coEdgesR18(): DataFrame = coEdges(spark, sfDir)
         def pagerankR18(): DataFrame = {
           val pairs = coEdgesR18()
           val edges = pairs.union(pairs.select($"dst".as("src"), $"src".as("dst")))
@@ -501,28 +476,6 @@ object ProfileR19 {
           rank.select($"node".as("part"), $"r".as("rank_fp"))
             .orderBy(desc("rank_fp"), $"part")
             .limit(100)
-        }
-        def trianglesR18(): DataFrame = {
-          org.apache.spark.sql.graft.GraftSqlFunctions.ensure(spark)
-          val oe = Graph.orientedEdges(coEdgesR18())
-            .repartition($"u").materialized
-          val cnt = oe.agg(count(lit(1))).head().getLong(0)
-          val perBucket = math.max(4000000L, cnt * 6 / 5 + 1)
-          val vn = s"r18t_${java.util.UUID.randomUUID.toString.take(8)}"
-          oe.createOrReplaceTempView(vn)
-          val out = spark.sql(s"""
-            WITH w AS (
-              SELECT e1.v AS b, e2.v AS c
-              FROM $vn e1 JOIN $vn e2
-                ON e1.u = e2.u AND e1.v < e2.v
-              WHERE bloom_might_contain(
-                (SELECT bloom_agg_exact(xxhash64(u, v), $perBucket) FROM $vn),
-                xxhash64(e1.v, e2.v))
-            )
-            SELECT /*+ BROADCAST(bc) */ COUNT(*) AS n_triangles
-            FROM w JOIN $vn bc ON w.b = bc.u AND w.c = bc.v""")
-          spark.catalog.dropTempView(vn)
-          out
         }
         def reachR18(): DataFrame = {
           val pairs = coEdgesR18()
@@ -582,66 +535,8 @@ object ProfileR19 {
         // against accidental re-divergence; the rejected candidate
         // stays under `lp2`.
         if (want("pagerank")) ab("pagerank", pagerankR18 _, () => q("q_graph_pagerank"))
-        if (want("triangles")) ab("triangles", trianglesR18 _, () => q("q_graph_triangles"))
         if (want("reach")) ab("reach", reachR18 _, () => q("q_graph_reachability"))
         if (want("linkpred")) ab("linkpred", linkpredR18 _, () => q("q_graph_linkpred"))
-      case "trix20" =>
-        // Triangles old-vs-new at the ×20 corpus, where the transport
-        // flips to broadcast bloom + SHUFFLE_HASH closure (24M oriented
-        // edges > both thresholds) — a code path sf0.1 never exercises.
-        // Light cell: 1 warm + 2 timed per arm, sequential (the ablp1
-        // precedent; full interleave unaffordable at ~30 s/run).
-        def triR18x(): DataFrame = {
-          org.apache.spark.sql.graft.GraftSqlFunctions.ensure(spark)
-          val oe = Graph.orientedEdges(Graph.coEdges(spark, sfDir))
-            .repartition($"u").materialized
-          val cntFp = oe.agg(count(lit(1)),
-            coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-          val edgeRows = cntFp.getLong(0)
-          val fp = cntFp.getLong(1)
-          val perBucket = math.max(4000000L, edgeRows * 6 / 5 + 1)
-          val bloomBytes = {
-            val vn = s"x20t_${java.util.UUID.randomUUID.toString.take(8)}"
-            oe.createOrReplaceTempView(vn)
-            val b = spark.sql(
-              s"SELECT bloom_agg_exact(xxhash64(u, v), $perBucket) FROM $vn")
-              .head().getAs[Array[Byte]](0)
-            spark.catalog.dropTempView(vn)
-            Seq(b)
-          }
-          val blooms = graft.core.Broadcasts.track(spark.sparkContext.broadcast(
-            bloomBytes.map(bs => org.apache.spark.util.sketch.BloomFilter
-              .readFrom(bs)).toArray))
-          val closing = xxhash64(col("e1.v"), col("e2.v"))
-          val wedges = oe.as("e1")
-            .join(oe.as("e2"),
-              col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-            .where(org.apache.spark.sql.graft.BloomBucketProbe
-              .probe(closing, blooms))
-            .select(col("e1.v").as("b"), col("e2.v").as("c"))
-          val bc = oe.as("bc").hint("shuffle_hash")
-          val guard = oe.agg(count(lit(1)).as("__edge_cnt"),
-            coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("__edge_fp"))
-          wedges.join(bc, col("b") === col("bc.u") && col("c") === col("bc.v"))
-            .agg(count(lit(1)).as("n_triangles"))
-            .crossJoin(broadcast(guard))
-            .select(when(col("__edge_cnt") === lit(edgeRows) &&
-              col("__edge_fp") === lit(fp), col("n_triangles"))
-              .otherwise(raise_error(lit("stale"))).as("n_triangles"))
-        }
-        val armSel = args.drop(1).headOption
-        Seq(("old", () => triR18x()),
-          ("new", () => q("q_graph_triangles")))
-          .filter(p => armSel.forall(_ == p._1)).foreach { case (nm, mk) =>
-          val t0 = System.nanoTime(); consume(mk())
-          val w = (System.nanoTime() - t0) / 1e9
-          val ts = (1 to 2).map { _ =>
-            val t1 = System.nanoTime(); consume(mk())
-            (System.nanoTime() - t1) / 1e9
-          }
-          println(f"PROFR19 trix20 $nm warm=$w%.1f " +
-            f"timed=${ts.map(t => f"$t%.1f").mkString(",")}")
-        }
       case "warm2" =>
         // The next in-sweep tier never individually verdicted by the
         // r17/r18 profiles: warm medians separate plan cost from the
@@ -749,8 +644,7 @@ object ProfileR19 {
         def tri3old(): DataFrame = {
           org.apache.spark.sql.graft.GraftSqlFunctions.ensure(spark)
           val grouped = Graph.symAdjacency(spark, sfDir).materialized
-          val gr = Graph.orientedEdgesFromAdjacency(grouped)
-            .groupBy($"u").agg(sort_array(collect_list($"v")).as("nbrs"))
+          val gr = Graph.orientedAdjacency(grouped)
             .materialized
           val oe = gr.select($"u", explode($"nbrs").as("v"))
           val cnt = oe.agg(count(lit(1))).head().getLong(0)
@@ -790,13 +684,11 @@ object ProfileR19 {
         timeIt("tri_sym_ckpt") { Graph.symAdjacency(spark, sfDir).materialized; () }
         val groupedM = Graph.symAdjacency(spark, sfDir).materialized
         timeIt("tri_oriented_ckpt") {
-          Graph.orientedEdgesFromAdjacency(groupedM)
-            .groupBy($"u").agg(sort_array(collect_list($"v")).as("nbrs"))
+          Graph.orientedAdjacency(groupedM)
             .materialized
           ()
         }
-        val grM = Graph.orientedEdgesFromAdjacency(groupedM)
-          .groupBy($"u").agg(sort_array(collect_list($"v")).as("nbrs"))
+        val grM = Graph.orientedAdjacency(groupedM)
           .materialized
         val oeM = grM.select($"u", explode($"nbrs").as("v"))
         val cnt = oeM.agg(count(lit(1))).head().getLong(0)
@@ -977,7 +869,6 @@ object ProfileR19 {
         }
         ab("kb2", () => q("q_dedup_keep_best"), () => kb2())
       case "lp"   => ab("linkpred", () => q("q_graph_linkpred"), () => lpNew())
-      case "tri"  => ab("triangles", () => q("q_graph_triangles"), () => triNew())
       case "pr"   => ab("pagerank", () => q("q_graph_pagerank"), () => prNew())
       case "cont" => ab("containment", () => q("q_text_containment"), () => contNew())
       case other  => sys.error(s"unknown part: $other")
